@@ -13,13 +13,11 @@ engine-wide properties hold:
    everything upstream of it from ``executedPlan``-walking audits — by
    round 10 the pr1/pr2/d16 "plans" were mostly ``Scan ExistingRDD``
    leaves, so a wide shuffle introduced UPSTREAM of any checkpoint was
-   invisible to the shuffle-payload audit.  When
-   ``SPARK_GRAFT_CAPTURE_CKPT_PLANS`` is set (the plan-audit tests set
-   it), :func:`ckpt` records every checkpointed segment's executed plan
-   in :data:`CAPTURED` before cutting it; the audits then walk the final
-   plan PLUS every captured segment, covering the whole computation.
-   Capturing plans costs planning time only, so it stays off outside the
-   audits.
+   invisible to the shuffle-payload audit.  Inside a :func:`capture`
+   block, :func:`ckpt` records every checkpointed segment's executed plan
+   before cutting it; the audits then walk the final plan PLUS every
+   captured segment, covering the whole computation.  Capturing costs
+   planning time only, and outside a block nothing is kept.
 
 A full no-checkpoint mode is NOT offered on purpose: the iterative graph
 loops rely on the leaves to keep their logical plans constant-size (a
@@ -31,22 +29,30 @@ the same operators without rebuilding the exponential tree.
 
 from __future__ import annotations
 
-import os
+from collections.abc import Iterator
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame
 
-# (label, JVM SparkPlan) pairs captured since the last clear_captured().
-CAPTURED: list[tuple[str, object]] = []
-
-_CAPTURE_ENV = "SPARK_GRAFT_CAPTURE_CKPT_PLANS"
+# (label, JVM SparkPlan) pairs of the innermost open capture() block.
+_segments: list[tuple[str, object]] | None = None
 
 
-def clear_captured() -> None:
-    CAPTURED.clear()
+@contextmanager
+def capture() -> Iterator[list[tuple[str, object]]]:
+    """Collect the (label, executed plan) of every checkpoint cut inside
+    the block; the list is emptied on exit, releasing the JVM plans."""
+    global _segments
+    outer, _segments = _segments, []
+    try:
+        yield _segments
+    finally:
+        _segments.clear()
+        _segments = outer
 
 
 def ckpt(df: DataFrame, label: str = "") -> DataFrame:
-    """Lazy localCheckpoint with optional segment-plan capture."""
-    if os.environ.get(_CAPTURE_ENV):
-        CAPTURED.append((label, df._jdf.queryExecution().executedPlan()))
+    """Lazy localCheckpoint; records the segment's plan inside capture()."""
+    if _segments is not None:
+        _segments.append((label, df._jdf.queryExecution().executedPlan()))
     return df.localCheckpoint(eager=False)

@@ -117,29 +117,6 @@ def _shingles(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     )
 
 
-def _gram_arrays(
-    df: DataFrame, id_col: str, text_col: str, n: int = 3
-) -> DataFrame:
-    """(id, _grams) with the distinct-shingle array materialized per doc.
-
-    Docs too short to shingle (< n tokens → zero n-grams) are dropped
-    HERE, on the cheap token-array size — exactly the rows an
-    ``explode`` of the gram array would have dropped — so the heavy
-    ngram/hash expressions are never inlined into a filter condition
-    (the ngrams_from_tokens perf note) and never run on unusable rows.
-    The threshold derives from the same ``n`` as the gram definition
-    (ADVICE r10: a hardcoded 3 desyncs for n > 3 and would emit rows
-    with NULL signatures instead of dropping them).
-    """
-    return (
-        df.select(F.col(id_col), tokens(text_col).alias("_toks"))
-        .where(F.size("_toks") >= n)
-        .select(
-            F.col(id_col), ngrams_from_tokens(F.col("_toks"), n).alias("_grams")
-        )
-    )
-
-
 def exact_dedup(
     df: DataFrame, id_col: str, text_col: str, parallelism: int | None = None
 ) -> DataFrame:

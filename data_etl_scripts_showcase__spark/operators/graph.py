@@ -357,9 +357,10 @@ def connected_components_alternating(
         # broadcast ~1.35 s (driver-side broadcast build dominates) vs
         # r10's SMJ in between; and SHJ is the only one of the three
         # that is also safe when the graph is 100 TB.  The groupBy above
-        # and this join share the hash-on-u exchange.
-        mins = mins.hint("shuffle_hash")
-        j = sym.join(mins, "u")
+        # and this join share the hash-on-u exchange.  The hint sits on
+        # the join side only: on the small-star union branch below Spark
+        # would discard it (HintErrorLogger: not part of a join).
+        j = sym.join(mins.hint("shuffle_hash"), "u")
         if large:
             out = j.where(F.col("v") > F.col("u")).select(
                 F.col("v").alias("a"), F.col("m").alias("b")

@@ -79,16 +79,6 @@ def pil_available() -> bool:
         return False
 
 
-def soundfile_available() -> bool:
-    """True iff the preferred audio codec (soundfile) is importable."""
-    try:
-        import soundfile  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
-
-
 def _parse_y4m(payload: bytes) -> tuple[int, int, int]:
     """Parse an uncompressed YUV4MPEG2 (y4m) stream: (width, height,
     n_frames).

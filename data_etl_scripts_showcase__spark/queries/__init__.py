@@ -57,7 +57,7 @@ def fragment(name: str):
     query whose builder executes an action at build time (streaming start,
     file write, raising QA gate).
 
-    The engine-wide plan audits (tests/test_plans.py) cannot explain those
+    The engine-wide plan audits (tests/plan_audits.py) cannot explain those
     queries' returned frames without running the action — and for streaming
     jobs the returned frame is just a memory-sink scan, so its plan says
     nothing about the job.  The fragment is the same operator tree built

@@ -926,7 +926,7 @@ def st21_stream_shard_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
 # registered so the engine-wide cartesian + window audits walk a real plan
 # for these queries instead of skipping them.  st4/st5/st11 have NO batch
 # twin (their operators exist only on streams) and stay justified skips in
-# tests/test_plans.py.
+# tests/plan_audits.py.
 
 
 @fragment("st1_stream_tumbling_counts")

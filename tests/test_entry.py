@@ -4,6 +4,7 @@ from __future__ import annotations
 
 import importlib
 
+import plan_audits
 import pytest
 
 
@@ -27,38 +28,11 @@ def test_registry_shape(entry_mod):
         assert isinstance(sql, str) and sql.strip(), name
 
 
-def test_all_queries_run_at_smoke_sf(spark, sf_dir, entry_mod):
-    for name, fn in entry_mod.queries().items():
-        df = fn(spark, sf_dir)
-        assert df.count() >= 0, name
-
-
-def test_no_nested_types_in_oracle_checked_output(spark, sf_dir, entry_mod):
-    """Driver-canonicalizer contract: every oracle-paired query must ship
-    only scalar top-level columns — the driver's pandas hasher raises
-    ``unhashable type: 'list'`` on ArrayType/MapType/StructType cells
-    (round-2 red row t11).  Schema-only check: no job is launched."""
-    from pyspark.sql.types import ArrayType, MapType, StructType
-
-    oracles = entry_mod.oracle_sql()
-    offenders = []
-    for name, fn in entry_mod.queries().items():
-        if name not in oracles:
-            continue  # rows-only queries are not value-hashed by the driver
-        schema = fn(spark, sf_dir).schema
-        for field in schema.fields:
-            if isinstance(field.dataType, (ArrayType, MapType, StructType)):
-                offenders.append(f"{name}.{field.name}: {field.dataType.simpleString()}")
-    assert not offenders, (
-        "oracle-paired queries with driver-unhashable top-level columns "
-        "(stringify via array_join/to_json): " + "; ".join(offenders)
-    )
-
-
 def test_schema_lint_catches_array_output(spark, sf_dir):
-    """The lint above must actually detect a raw-array projection."""
+    """The sweep's nested-type lint (plan_audits.nested_columns, run on
+    every query by tests/test_oracle_equivalence.py) must actually detect
+    a raw-array projection."""
     from pyspark.sql import functions as F
-    from pyspark.sql.types import ArrayType, MapType, StructType
 
     from data_etl_scripts_showcase__spark.sources import load_table
 
@@ -67,9 +41,4 @@ def test_schema_lint_catches_array_output(spark, sf_dir):
         .groupBy("r_regionkey")
         .agg(F.collect_list("r_name").alias("names"))
     )
-    bad = [
-        f.name
-        for f in df.schema.fields
-        if isinstance(f.dataType, (ArrayType, MapType, StructType))
-    ]
-    assert bad == ["names"]
+    assert plan_audits.nested_columns(df.schema) == ["names: array<string>"]

@@ -12,6 +12,9 @@ from __future__ import annotations
 import contextlib
 import io
 
+import plan_audits
+import pytest
+
 from data_etl_scripts_showcase__spark.queries import FRAGMENTS, load_all
 
 SF = "/root/testdata/sf0.001"
@@ -19,25 +22,6 @@ SF = "/root/testdata/sf0.001"
 
 def plan_of(spark, name: str) -> str:
     df = load_all()[name].fn(spark, SF)
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        df.explain("formatted")
-    return buf.getvalue()
-
-
-def audit_df(spark, name: str):
-    """The frame the engine-wide audits walk for a query: its registered
-    plan FRAGMENT if the builder executes an action at build time
-    (queries.fragment(), VERDICT r4 #3), else the query's own frame."""
-    registry = load_all()
-    builder = FRAGMENTS.get(name)
-    if builder is not None:
-        return builder(spark, SF)
-    return registry[name].fn(spark, SF)
-
-
-def audit_plan_of(spark, name: str) -> str:
-    df = audit_df(spark, name)
     buf = io.StringIO()
     with contextlib.redirect_stdout(buf):
         df.explain("formatted")
@@ -297,9 +281,9 @@ class TestNewOpPlans:
 class TestFragmentRegistry:
     def test_every_fragment_names_a_registered_query(self):
         """A typo'd fragment key would be silently orphaned — the audits
-        would fall back to q.fn and EXECUTE the action they were meant to
-        avoid (slow, side-effectful, and for streaming jobs auditing a
-        meaningless memory-sink scan).  Keys must match the registry."""
+        would fall back to the frame q.fn returned, which for streaming
+        jobs is a meaningless memory-sink scan.  Keys must match the
+        registry."""
         registry = load_all()
         orphans = sorted(set(FRAGMENTS) - set(registry))
         assert not orphans, f"fragments with no registered query: {orphans}"
@@ -307,7 +291,7 @@ class TestFragmentRegistry:
     def test_fragment_coverage_plus_skips_is_exhaustive(self):
         """Every action-executing query is either fragment-audited or a
         justified SKIP — if someone adds a new streaming/write query
-        without a fragment, the audits will execute its action; this test
+        without a fragment, the audits walk its sink read-back; this test
         is the reminder that a fragment (or a justified skip) is part of
         the contract.  Heuristic: queries whose builder source mentions a
         terminal action."""
@@ -320,7 +304,7 @@ class TestFragmentRegistry:
             "write_text(", "write_snapshot(", "write_json_archive(",
             "reconcile(",
         )
-        covered = set(FRAGMENTS) | TestEngineWidePlanAudit.SKIP
+        covered = set(FRAGMENTS) | plan_audits.SKIP
         missing = []
         for name, q in sorted(registry.items()):
             src = inspect.getsource(q.fn)
@@ -350,47 +334,19 @@ class TestFragmentRegistry:
 
 
 class TestEngineWidePlanAudit:
-    # j6 is the deliberate tiny cross join (SURVEY J-std); everything else
-    # must compile to hash/broadcast/sort-merge equality joins.
-    ALLOWED_CARTESIAN = {"j6_cross_join"}
-    # Queries whose builders EXECUTE an action (streaming start, file
-    # write, raising gate) register a lazily-buildable batch fragment via
-    # queries.fragment() — the audits walk THAT plan (see _auditable_df).
-    # Only queries with NO batch fragment remain skipped, each justified:
-    SKIP = {
-        # dropDuplicatesWithinWatermark exists only on streams; the batch
-        # DISTINCT twin is already audited as its oracle shape elsewhere
-        "st4_stream_dedup_keys",
-        # applyInPandasWithState is streaming-only; its state machine is
-        # gated by the batch-equivalence test in tests/test_streaming.py
-        "st5_stateful_user_activity",
-        # transformWithStateInPandas is streaming-only; same gate
-        "st11_transform_with_state",
-    }
+    """Negative control for the sweep's cartesian audit
+    (plan_audits.has_cartesian, run on every query by
+    tests/test_oracle_equivalence.py): a predicate that stopped matching
+    would pass silently inside the 325 green sweep cases."""
 
-    def test_no_accidental_cartesians_anywhere(self, spark):
-        """Engine-wide regression net: every registry query's physical plan
-        is free of non-broadcast CartesianProduct (except the deliberate
-        j6).  BroadcastNestedLoopJoin is allowed — Spark only picks it when
-        one side is a broadcast, and every such site in this engine is a
-        bounded-by-design side (a 1-row aggregate scalar, the 8-vector
-        query set, k centroids; each documented at its query).  A true
-        all-pairs data×data join surfaces as CartesianProduct and fails
-        here even while its oracle still passes at test scale — at 100 TB
-        that plan is the difference between minutes and never-finishes."""
-        registry = load_all()
-        offenders = []
-        for name, q in sorted(registry.items()):
-            if name in self.SKIP or name in self.ALLOWED_CARTESIAN:
-                continue
-            try:
-                plan = audit_plan_of(spark, name)
-            except Exception as e:  # pragma: no cover - surface build errors
-                offenders.append(f"{name}: explain failed: {e}")
-                continue
-            if "CartesianProduct" in plan:
-                offenders.append(name)
-        assert not offenders, offenders
+    def test_audit_flags_a_data_cartesian(self, spark):
+        from data_etl_scripts_showcase__spark.sources import load_table
+
+        nation = load_table(spark, SF, "nation")
+        region = load_table(spark, SF, "region")
+        bad = nation.hint("shuffle_replicate_nl").crossJoin(region)
+        bad.collect()
+        assert plan_audits.has_cartesian(bad._jdf.queryExecution().executedPlan())
 
 
 class TestDynamicPartitionPruning:
@@ -769,235 +725,38 @@ class TestRound4Plans:
 
 
 class TestEngineWideWindowAudit:
-    """Companion to TestEngineWidePlanAudit: no query may ship an
-    unpartitioned WindowExec whose input is unbounded.
+    """Controls for the sweep's unbounded-global-window audit
+    (plan_audits.has_unbounded_global_window): red on a global rank over
+    a raw scan and over join(scan, broadcast scalar agg) — the
+    branch-aware case, where an aggregate below the window must not
+    count as bounding it — and green on a limit-first global rank."""
 
-    A WindowExec with an empty partition spec moves EVERY input row to a
-    single partition — the one-reducer sort that turns a parallel plan
-    into a scale-killer at 100 TB (the v11/v17 class VERDICT r3 named).
-    It is acceptable ONLY when the input is already bounded: a preceding
-    TakeOrderedAndProject / GlobalLimit (top-k first, rank the k rows) or
-    an aggregate-to-constant (scalar digest).  Whitelist is currently
-    EMPTY — every global rank in the engine is limit-first or
-    scalar-bounded; w9/t18's global ntiles sit over aggregate-to-constant
-    / limited inputs and pass on their own (their scale-safe twins are
-    x44's bucketed deciles and a21's cutpoints)."""
+    @pytest.mark.parametrize(
+        "shape, flagged",
+        [("scan", True), ("scan_join_scalar", True), ("limit_first", False)],
+    )
+    def test_audit_on_global_rank(self, spark, shape, flagged):
+        from pyspark.sql import Window as W
+        from pyspark.sql import functions as F
 
-    # Same build-time-action skips as the cartesian audit.
-    SKIP = TestEngineWidePlanAudit.SKIP
-    # Reviewed global windows over inputs that are bounded by construction
-    # but not recognizable from plan structure alone (round 7: the walker
-    # fix below de-vacuumed this audit for AQE plans and these surfaced;
-    # t12/t18 from the same haul were REAL offenders and were rewritten
-    # onto global_row_ids instead of being listed here):
-    WHITELIST: set[str] = {
-        # deliberate single-reducer ntile baseline, documented as such;
-        # its distributed exact twin is x44 (same oracle semantics)
-        "w9_ntile_deciles",
-        # window input = per-histogram-bin aggregate; |bins| is the fixed
-        # design constant of the sketch (64), independent of data volume
-        "a28_histogram_quantile_audit",
-        # window input = per-shuffle-partition aggregate; |partitions| is
-        # the fixed partition count the report diagnoses (32)
-        "x30_partition_skew_report",
-        # window input = per-source weight table; |sources| is the corpus
-        # registry (~20), the same bounded dim the mixture designs over
-        "x43_temperature_mixture",
-    }
+        from data_etl_scripts_showcase__spark.sources import load_table
 
-    @staticmethod
-    def _walk(node):
-        """Every node of the physical plan, INCLUDING inside AQE.
-
-        ``queryExecution().executedPlan()`` on an adaptive query returns
-        an ``AdaptiveSparkPlanExec``, which is a LEAF node (children() is
-        empty) wrapping the real tree — a naive child walk sees exactly
-        one node and audits nothing (round-7 finding: both engine-wide
-        executed-plan audits were vacuous for every AQE-wrapped plan,
-        i.e. every plan containing an exchange).  Recurse through its
-        ``initialPlan()`` — the EnsureRequirements-applied physical plan,
-        where ShuffleExchangeExec / WindowExec nodes are visible before
-        runtime re-optimization."""
-        yield node
-        if node.getClass().getSimpleName() == "AdaptiveSparkPlanExec":
-            yield from TestEngineWideWindowAudit._walk(node.initialPlan())
-            return
-        ch = node.children()
-        for i in range(ch.size()):
-            yield from TestEngineWideWindowAudit._walk(ch.apply(i))
-
-    @classmethod
-    def _is_bounded(cls, node) -> bool:
-        """Row-count-bounded subtree: a limit, a grouping-empty (scalar)
-        aggregate, or any node ALL of whose input branches are bounded.
-
-        Branch-aware on purpose (ADVICE r4): `any descendant is a limit`
-        would mark a global window over join(unbounded_scan,
-        broadcast_scalar_agg) as bounded — exactly the pre-fix x11 shape
-        this audit exists to catch.  A join/union is bounded only if EVERY
-        child is; a leaf scan is unbounded."""
-        name = node.getClass().getSimpleName()
-        if any(
-            b in name
-            for b in ("TakeOrderedAndProject", "GlobalLimit", "CollectLimit")
-        ):
-            return True
-        if "Aggregate" in name:
-            try:
-                grouping = node.groupingExpressions()
-                if grouping.isEmpty():
-                    return True
-                # engine convention: `_bkt*` columns are derived
-                # constant-domain range buckets (pmod/floor over a bounded
-                # value range — operators/prefix.py, global_row_ids), so a
-                # per-bucket aggregate has |buckets| rows at any volume.
-                names = [
-                    grouping.apply(i).toString() for i in range(grouping.size())
-                ]
-                if names and all(n.lstrip("'").startswith("_bkt") for n in names):
-                    return True
-            except Exception:
-                pass
-        ch = node.children()
-        n = ch.size()
-        if n == 0:
-            return False
-        return all(cls._is_bounded(ch.apply(i)) for i in range(n))
-
-    @classmethod
-    def _has_unbounded_global_window(cls, jplan) -> bool:
-        for node in cls._walk(jplan):
-            if node.getClass().getSimpleName() != "WindowExec":
-                continue
-            if not node.partitionSpec().isEmpty():
-                continue
-            ch = node.children()
-            if not all(cls._is_bounded(ch.apply(i)) for i in range(ch.size())):
-                return True
-        return False
-
-    def test_no_unbounded_global_windows_anywhere(self, spark):
-        registry = load_all()
-        offenders = []
-        for name, q in sorted(registry.items()):
-            if name in self.SKIP or name in self.WHITELIST:
-                continue
-            try:
-                jplan = audit_df(spark, name)._jdf.queryExecution().executedPlan()
-            except Exception as e:  # pragma: no cover - surface build errors
-                offenders.append(f"{name}: plan build failed: {e}")
-                continue
-            if self._has_unbounded_global_window(jplan):
-                offenders.append(name)
-        assert not offenders, offenders
+        o = load_table(spark, SF, "orders").select("o_orderkey", "o_totalprice")
+        scalar = o.agg(F.max("o_totalprice").alias("top"))
+        ranked = {
+            "scan": o,
+            "scan_join_scalar": o.crossJoin(F.broadcast(scalar)),
+            "limit_first": o.orderBy(F.desc("o_totalprice")).limit(10),
+        }[shape].withColumn("r", F.rank().over(W.orderBy(F.desc("o_totalprice"))))
+        ranked.collect()
+        jplan = ranked._jdf.queryExecution().executedPlan()
+        assert plan_audits.has_unbounded_global_window(jplan) == flagged
 
 
 class TestEngineWideShufflePayloadAudit:
-    """No query may ship a SHUFFLE Exchange whose rows carry a source
-    payload column (document text / binary content / raw embedding).
-
-    VERDICT r6 #6: the CDC chunk defect passed every existing audit because
-    audits assert operator SHAPES (no cartesian, windows partitioned, joins
-    keyed) but never what an Exchange CARRIES.  A shuffle is priced by its
-    payload: hashpartitioning on doc_id is fine when rows are (id, md5),
-    and a scale-killer when every row drags the full document through the
-    wire — at 100 TB the payload IS the cost.  The engine's discipline is
-    to digest/project payloads map-side BEFORE any Exchange; this audit
-    makes that discipline load-bearing.
-
-    BroadcastExchange is exempt on purpose: broadcasting a bounded side
-    that happens to include text (e.g. d23's benchmark chunk table) is the
-    pattern we WANT — the corpus-sized side is the one that must not
-    shuffle wide.
-    """
-
-    SKIP = TestEngineWidePlanAudit.SKIP
-    # Source payload columns (testdata schema): documents.text,
-    # the multimodal binary column, embeddings.embedding — PLUS the
-    # engine's own aliases for them (round 11, VERDICT r10 #5: the kNN
-    # operators rename embedding→c_vec/q_vec and the PQ/kmeans paths
-    # carry vec/sub slices, so a rename used to evade the audit — r10's
-    # v7 wide shuffle existed at r9 too, it just shuffled under the
-    # alias).  Aliases here must track operators/similarity.py and the
-    # v8/v11 query bodies.
-    WIDE = {
-        "text",
-        "content",
-        "embedding",
-        # operators/similarity.knn_bruteforce / *_rerank aliases
-        "c_vec",
-        "q_vec",
-        # full-vector aliases (v8 kmeans, v10/v11 PQ corpus prep)
-        "vec",
-        "va",
-        "vb",
-    }
-    # Justified wide shuffles (VERDICT r6 #6 allows ≤5, each needing a
-    # documented reason).  EMPTY: after the round-7 rewrites (CDC chunking
-    # map-side; IVF cell assignment map-side over a broadcast centroid
-    # array), every payload column in the engine is digested, ranked, or
-    # projected away before its first hash shuffle.
-    ALLOW: set[str] = set()
-
-    # Scan-stage node classes: a RoundRobinPartitioning exchange whose
-    # subtree is only these is the documented `parallelism` knob — an
-    # explicit repartition of RAW source rows that exists because local
-    # testdata parquet is single-row-group and unsplittable (SCALE.md
-    # "Known local-vs-cluster deltas").  It moves each payload ONCE,
-    # linearly, before any fan-out; at cluster scale the knob is None and
-    # the exchange disappears.  Structurally exempt (not per-query — any
-    # NEW query using the same knob is equally justified).
-    #
-    # Round 11: a map-side BROADCAST enrichment below the spread (v7's
-    # quality gate: embeddings ⋈ broadcast(ok_ids) before the knn spread)
-    # is the same linear one-pass move — the stream side never hits a
-    # keyed exchange — so broadcast-join nodes are allowed in the spread
-    # subtree.  The broadcast SIDE's own subtree is skipped here: every
-    # exchange in it is still independently audited by the outer walk.
-    _SCAN_STAGE = {
-        "ProjectExec",
-        "FilterExec",
-        "FileSourceScanExec",
-        "ColumnarToRowExec",
-        "InputAdapter",
-        "WholeStageCodegenExec",
-        "BatchScanExec",
-        "BroadcastHashJoinExec",
-        "BroadcastNestedLoopJoinExec",
-    }
-
-    @classmethod
-    def _spread_subtree_ok(cls, node) -> bool:
-        name = node.getClass().getSimpleName()
-        if name == "BroadcastExchangeExec":
-            # small side: its internal exchanges are audited by the
-            # outer walk; the stream side's linearity is what matters.
-            return True
-        if name not in cls._SCAN_STAGE:
-            return False
-        ch = node.children()
-        return all(cls._spread_subtree_ok(ch.apply(i)) for i in range(ch.size()))
-
-    @classmethod
-    def _is_scan_repartition(cls, node) -> bool:
-        if "RoundRobinPartitioning" not in node.outputPartitioning().toString():
-            return False
-        return cls._spread_subtree_ok(node.children().apply(0))
-
-    @classmethod
-    def _offending_exchanges(cls, jplan, wide: set[str]) -> list[str]:
-        hits = []
-        for node in TestEngineWideWindowAudit._walk(jplan):
-            if node.getClass().getSimpleName() != "ShuffleExchangeExec":
-                continue
-            if cls._is_scan_repartition(node):
-                continue
-            out = node.output()
-            names = {out.apply(i).name() for i in range(out.size())}
-            carried = sorted(names & wide)
-            if carried:
-                hits.append(f"shuffle carries {carried}")
-        return hits
+    """Controls for the sweep's payload-shuffle audit
+    (plan_audits.offending_exchanges) and for the checkpoint-segment
+    capture it relies on to see past checkpoint leaves."""
 
     def test_audit_flags_the_pre_rewrite_chunk_shape(self, spark):
         """Negative control: the audit must be RED on the exact shape the
@@ -1027,69 +786,27 @@ class TestEngineWideShufflePayloadAudit:
             "doc_id", F.md5(F.expr("substring(text, i, chunk_len)")).alias("h")
         )
         jplan = bad._jdf.queryExecution().executedPlan()
-        assert self._offending_exchanges(jplan, self.WIDE)
-
-    def test_no_wide_payload_through_any_shuffle(self, spark):
-        """Walks the final executed plan PLUS every checkpointed segment
-        (round 11, VERDICT r10 #5/#7a): a localCheckpoint leaf hides its
-        upstream plan from this audit, so the engine's ckpt() seam
-        captures each segment's executed plan at checkpoint time when
-        SPARK_GRAFT_CAPTURE_CKPT_PLANS is set — a wide shuffle upstream
-        of any checkpoint is now as visible as one in the final plan."""
-        import os
-
-        from data_etl_scripts_showcase__spark import ckpt as CK
-
-        registry = load_all()
-        offenders = []
-        os.environ["SPARK_GRAFT_CAPTURE_CKPT_PLANS"] = "1"
-        try:
-            for name in sorted(registry):
-                if name in self.SKIP or name in self.ALLOW:
-                    continue
-                CK.clear_captured()
-                try:
-                    jplan = (
-                        audit_df(spark, name)._jdf.queryExecution().executedPlan()
-                    )
-                except Exception as e:  # pragma: no cover - surface build errors
-                    offenders.append(f"{name}: plan build failed: {e}")
-                    continue
-                plans = [("final", jplan)] + list(CK.CAPTURED)
-                hits = [
-                    f"{where or 'segment'}: {h}"
-                    for where, p in plans
-                    for h in self._offending_exchanges(p, self.WIDE)
-                ]
-                if hits:
-                    offenders.append(f"{name}: {hits}")
-        finally:
-            os.environ.pop("SPARK_GRAFT_CAPTURE_CKPT_PLANS", None)
-            CK.clear_captured()
-        assert not offenders, "\n".join(offenders)
+        assert plan_audits.offending_exchanges(jplan)
 
     def test_checkpoint_segments_are_captured(self, spark):
         """Coverage proof for the blind-spot fix: building pr4 (whose
-        edge pipeline is checkpointed) under the capture flag must yield
+        edge pipeline is checkpointed) inside ckpt.capture() must yield
         checkpoint segments, and at least one segment must contain a
-        ShuffleExchange — i.e. the audit above really does see plan
-        regions the final executedPlan no longer shows."""
-        import os
+        ShuffleExchange — i.e. the sweep's audits really do see plan
+        regions the final executedPlan no longer shows.  The block owns
+        its segments: they are dropped on exit, and a build outside any
+        block records nothing."""
+        from data_etl_scripts_showcase__spark import ckpt
 
-        from data_etl_scripts_showcase__spark import ckpt as CK
-
-        os.environ["SPARK_GRAFT_CAPTURE_CKPT_PLANS"] = "1"
-        try:
-            CK.clear_captured()
-            audit_df(spark, "pr4_cc_alternating")._jdf.queryExecution(
-            ).executedPlan()
-            assert CK.CAPTURED, "no checkpoint segments captured"
+        build = load_all()["pr4_cc_alternating"].fn
+        with ckpt.capture() as segments:
+            build(spark, SF)
+            assert segments, "no checkpoint segments captured"
             assert any(
-                "Exchange" in jp.toString() for _, jp in CK.CAPTURED
+                "Exchange" in jp.toString() for _, jp in segments
             ), "captured segments show no exchanges — capture is vacuous"
-        finally:
-            os.environ.pop("SPARK_GRAFT_CAPTURE_CKPT_PLANS", None)
-            CK.clear_captured()
+        assert not segments
+        assert ckpt._segments is None
 
 
 class TestContentKeyedCountJoins:

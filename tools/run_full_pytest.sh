@@ -12,7 +12,10 @@ cd "$(dirname "$0")/.."
 
 hash="$(bash tools/source_hash.sh)"
 start=$(date +%s)
-python -m pytest tests/ -q | tee /tmp/fullpytest.log
+# the tier-1 command (ROADMAP.md), plus the 15 slowest tests for the marker
+export SPARK_GRAFT_CPUS="$(env -u OMP_NUM_THREADS nproc)" SPARK_LOCAL_DIRS=/tmp/spark-local
+timeout -k 10 2670 python -m pytest tests/ -q --continue-on-collection-errors \
+  -p no:cacheprovider --durations=15 | tee /tmp/fullpytest.log
 dur=$(( $(date +%s) - start ))
 tail=$(grep -E "passed|failed" /tmp/fullpytest.log | tail -1)
 
@@ -21,6 +24,8 @@ tail=$(grep -E "passed|failed" /tmp/fullpytest.log | tail -1)
   echo "finished_utc=$(date -u +%FT%TZ)"
   echo "duration_s=$dur"
   echo "result=$tail"
+  echo "slowest:"
+  sed -n '/slowest 15 durations/,/^$/p' /tmp/fullpytest.log | grep -E '^[0-9.]+s ' || true
 } > .fullpytest_ok
 echo "[full-pytest] marker written: $tail (${dur}s)"
 
