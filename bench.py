@@ -1,5 +1,9 @@
 """Benchmark harness: runs the headline queries at $SPARK_GRAFT_SF_DIR.
 
+Usage:  python bench.py                 # the HEADLINE set -> BENCH_DETAIL.json
+        python bench.py --full          # every registry query -> BENCH_FULL.json
+        python bench.py NAME [NAME ...] # just these queries, no sidecar file
+
 Prints ONE JSON line:
   {"metric": "...", "value": N, "unit": "sec", "queries": {...}, "sf": ...}
 
@@ -152,7 +156,8 @@ def main() -> None:
     # Results land in BENCH_FULL.json; the driver's plain invocation and
     # its BENCH_DETAIL.json stay the unchanged 109-query series.
     full = "--full" in sys.argv
-    names = (
+    picked = [a for a in sys.argv[1:] if not a.startswith("-")]
+    names = picked or (
         sorted(registry)
         if full
         else [n for n in HEADLINE if n in registry]
@@ -210,8 +215,14 @@ def main() -> None:
     # compact (r2's 85-query line was truncated by the driver's tail capture
     # mid-object, so BENCH_r02.json recorded `parsed: null`).
     best = {n: min(run1[n], timings[n]) for n in timings}
+    if picked:
+        metric, out_name = "named_queries_total", None
+    elif full:
+        metric, out_name = "full_registry_total", "BENCH_FULL.json"
+    else:
+        metric, out_name = "headline_queries_total", "BENCH_DETAIL.json"
     detail = {
-        "metric": "full_registry_total" if full else "headline_queries_total",
+        "metric": metric,
         "value": total,
         "unit": "sec",
         "n_queries": len(timings),
@@ -237,9 +248,9 @@ def main() -> None:
     detail["load_context"]["host_busy"] = bool(
         load_before[0] > (os.cpu_count() or 32) / 4 or n_procs > 4
     )
-    out_name = "BENCH_FULL.json" if full else "BENCH_DETAIL.json"
-    with open(os.path.join(REPO, out_name), "w") as fh:
-        json.dump(detail, fh, indent=1, sort_keys=True)
+    if out_name:
+        with open(os.path.join(REPO, out_name), "w") as fh:
+            json.dump(detail, fh, indent=1, sort_keys=True)
 
     # The driver-visible headline is BEST-OF-2 since round 10 (VERDICT r9
     # #4): r9's run2-only headline moved 82.8→87.4 s while the engine got

@@ -262,7 +262,7 @@ def candidate_pairs(
     # an explode the estimator cannot see).  At real corpus scale the
     # estimate crosses the threshold with the data and the join becomes
     # the canonical (band, bucket) shuffle on its own.
-    # tools/broadcast_audit.py encodes this whitelist.
+    # The sweep's broadcast audit (tests/plan_audits.py) whitelists it.
     return (
         a.join(b, ["band", "bucket"])
         .where(F.col("id_a") < F.col("id_b"))

@@ -207,13 +207,15 @@ def d6_simhash_neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SimHash near-dup pairs within a blocking key (source), hamming ≤ 8.
 
     Blocking bounds the pair space; at scale the block key becomes the
-    shuffle/bucketing key so each executor compares only its block.
+    shuffle/bucketing key so each executor compares only its block.  Both
+    joins are pinned shuffled-hash: the per-doc signature table is
+    corpus-scaled, and an estimate-gated broadcast of it is the t14 class.
     """
     docs = load_table(spark, sf_dir, "documents")
     sh = DD.simhash32(
         docs, "doc_id", "text", parallelism=spark.sparkContext.defaultParallelism
     )
-    ds = docs.select("doc_id", "source").join(sh, "doc_id")
+    ds = docs.select("doc_id", "source").join(sh.hint("shuffle_hash"), "doc_id")
     a = ds.select(
         F.col("source"),
         F.col("doc_id").alias("id_a"),
@@ -226,7 +228,7 @@ def d6_simhash_neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     ham = DD.hamming32(F.col("sim_a"), F.col("sim_b"))
     return (
-        a.join(b, "source")
+        a.join(b.hint("shuffle_hash"), "source")
         .where(F.col("id_a") < F.col("id_b"))
         .select("id_a", "id_b", ham.cast("int").alias("hamming"))
         .where(F.col("hamming") <= 8)

@@ -455,13 +455,16 @@ def t10_repetition_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     The argmax term is pinned deterministically (max count, then
     lexicographically smallest term) — `max_by` alone is tie-ambiguous.
     All three aggregates key on doc_id, so the plan is one explode and a
-    chain of same-key hash aggregates: a single logical shuffle at 100 TB."""
+    chain of same-key hash aggregates: a single logical shuffle at 100 TB.
+    The per-doc table ``n`` is corpus-scaled with a scan-ratio size
+    estimate, so its joins are pinned shuffled-hash (the t14 lesson, see
+    t8) rather than left to an estimate-gated broadcast."""
     d = load_table(spark, sf_dir, "documents")
     tok = d.select("doc_id", F.explode(TX.tokens("text")).alias("term"))
     tf = tok.groupBy("doc_id", "term").agg(F.count("*").alias("c"))
     n = tf.groupBy("doc_id").agg(
         F.sum("c").alias("n_tokens"), F.max("c").alias("max_c")
-    )
+    ).hint("shuffle_hash")
     top = (
         tf.join(n, ["doc_id"])
         .where(F.col("c") == F.col("max_c"))
@@ -597,11 +600,12 @@ def t13_token_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Same single-logical-shuffle shape as t10: term counts, totals, and
     the entropy sum all key on doc_id.  The per-doc float sum spans at
-    most |vocab| terms, so the 6-dp round is stable."""
+    most |vocab| terms, so the 6-dp round is stable.  The tf⋈n join is
+    pinned shuffled-hash, as in t10."""
     d = load_table(spark, sf_dir, "documents")
     tok = d.select("doc_id", F.explode(TX.tokens("text")).alias("term"))
     tf = tok.groupBy("doc_id", "term").agg(F.count("*").alias("c"))
-    n = tf.groupBy("doc_id").agg(F.sum("c").alias("n_tok"))
+    n = tf.groupBy("doc_id").agg(F.sum("c").alias("n_tok")).hint("shuffle_hash")
     p = F.col("c").cast("double") / F.col("n_tok")
     return (
         tf.join(n, "doc_id")

@@ -57,11 +57,11 @@ def targeted_delete(
     parts = affected_partitions(df, part_col, key_col, keys)
     if not parts:
         return []
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     (
         df.where(F.col(part_col).isin(parts))
         .where(~F.col(key_col).isin(keys))
         .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
         .partitionBy(part_col)
         .parquet(base_path)
     )
@@ -114,11 +114,11 @@ def compact_partitions(
     if not parts:
         return []
     df = spark.read.parquet(base_path)
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     (
         df.where(F.col(part_col).isin(parts))
         .repartition(max(1, len(parts) // 4 + 1), F.col(part_col))
         .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
         .partitionBy(part_col)
         .parquet(base_path)
     )

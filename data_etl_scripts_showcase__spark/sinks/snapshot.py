@@ -35,11 +35,10 @@ def write_snapshot(
     (idempotent daily re-runs — what the reference's rename sweep tried to
     approximate).
     """
-    spark = df.sparkSession
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     (
         df.withColumn(DS_COL, F.lit(ds))
         .write.mode(mode)
+        .option("partitionOverwriteMode", "dynamic")
         .format(fmt)
         .partitionBy(DS_COL)
         .save(base_path)

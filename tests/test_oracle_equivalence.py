@@ -5,8 +5,8 @@ its DuckDB oracle — the comparison `python tools/check_correctness.py`
 makes at sf0.01.
 The same build then feeds every engine-wide per-query check
 (``plan_audits``): the output-schema lint, the cartesian / global-window /
-payload-shuffle audits over the executed plan and its checkpoint
-segments, and a guard that no join hint was discarded while building.
+payload-shuffle / content-broadcast audits over the executed plan and its
+checkpoint segments, and a guard that no join hint was discarded while building.
 """
 
 from __future__ import annotations
@@ -64,6 +64,7 @@ def test_oracle_equivalence(spark, sf_dir, duck, hint_log, name):
         audited = df
         if name in FRAGMENTS:  # the frame that ran sits behind an action
             segments.clear()
+            df.unpersist()  # a cache hit would hide the fragment's plan
             audited = FRAGMENTS[name](spark, sf_dir)
         plans = [("final", audited._jdf.queryExecution().executedPlan()), *segments]
         errs = plan_audits.audit(name, df.schema, plans)

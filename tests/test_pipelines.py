@@ -45,6 +45,21 @@ class TestSnapshotSink:
         assert read_snapshot(spark, base, "2026-01-01").count() == 4
         assert read_snapshot(spark, base, "2026-01-02").count() == 2
 
+    def test_dynamic_overwrite_does_not_leak_into_the_session(self, spark, tmp_path):
+        """Dynamic overwrite is an option of the snapshot write, not of the
+        session: a later plain partitioned overwrite still replaces the
+        whole directory, stale partitions included."""
+        key = "spark.sql.sources.partitionOverwriteMode"
+        before = spark.conf.get(key)
+        write_snapshot(spark.range(3), str(tmp_path / "snap3"), "2026-01-01")
+        assert spark.conf.get(key) == before
+        base = str(tmp_path / "plain")
+        spark.range(4).withColumn("p", F.lit("stale")).write.partitionBy("p").parquet(base)
+        spark.range(2).withColumn("p", F.lit("fresh")).write.mode(
+            "overwrite"
+        ).partitionBy("p").parquet(base)
+        assert [d for d in os.listdir(base) if d.startswith("p=")] == ["p=fresh"]
+
 
 class TestQualityGate:
     def test_reconcile_passes_and_raises(self, spark):

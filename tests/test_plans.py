@@ -348,6 +348,16 @@ class TestEngineWidePlanAudit:
         bad.collect()
         assert plan_audits.has_cartesian(bad._jdf.queryExecution().executedPlan())
 
+    def test_an_audit_that_checked_nothing_is_vacuous(self, monkeypatch):
+        """conftest fails the session on what vacuous_audits() returns:
+        a covered query swept while one audit's count stayed at zero."""
+        from collections import Counter
+
+        monkeypatch.setattr(plan_audits, "SWEPT", {"q1_pricing_summary"})
+        counts = Counter({a: 1 for a in plan_audits.EXEMPT if a != "broadcast"})
+        monkeypatch.setattr(plan_audits, "CHECKED", counts)
+        assert plan_audits.vacuous_audits() == ["broadcast"]
+
 
 class TestDynamicPartitionPruning:
     def test_dpp_prunes_fact_partitions_from_dim_filter(self, spark, tmp_path):

@@ -25,6 +25,7 @@ import os
 import shutil
 
 import numpy as np
+import plan_audits
 import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
@@ -282,36 +283,25 @@ class TestExactIntegerAllocation:
 
 
 class TestBroadcastAuditMatchers:
-    """Class (c) — t14-class content broadcasts (round 9) and the audit
-    tool that polices them.  Pins the flag/whitelist decision logic of
-    tools/broadcast_audit.py on synthetic plan text so a whitelist
+    """Class (c) — t14-class content broadcasts (round 9) and the sweep
+    audit that polices them (plan_audits.content_broadcasts).  Pins the
+    flag/whitelist decision logic on synthetic plan text so a whitelist
     regression (ADVICE r9: the old matcher pinned an exact Spark-internal
-    mode string) is a unit failure, not a noisy audit run."""
-
-    @pytest.fixture(scope="class")
-    def audit(self):
-        import importlib.util
-
-        spec = importlib.util.spec_from_file_location(
-            "broadcast_audit", os.path.join(REPO, "tools", "broadcast_audit.py")
-        )
-        mod = importlib.util.module_from_spec(spec)
-        spec.loader.exec_module(mod)
-        return mod
+    mode string) is a unit failure, not a noisy sweep case."""
 
     def _plan(self, header_mode, subtree_lines):
-        body = "\n".join(f"   {ln}" for ln in subtree_lines)
-        return f"+- BroadcastExchange {header_mode}, [plan_id=1]\n{body}\n+- Scan parquet\n"
+        header = f"BroadcastExchange {header_mode}, [plan_id=1]"
+        return header, "\n".join(subtree_lines)
 
-    def test_flags_content_explode_broadcast(self, audit):
+    def test_flags_content_explode_broadcast(self):
         plan = self._plan(
             "HashedRelationBroadcastMode(List(input[0, bigint, true]),false)",
             ["+- HashAggregate(keys=[bg#12], functions=[count(1)])",
              "   +- Generate explode(tokens#3), ..."],
         )
-        assert audit.flag_positions(plan)
+        assert plan_audits.is_content_broadcast(*plan)
 
-    def test_whitelists_lsh_bucket_selfjoin_by_key_attrs(self, audit):
+    def test_whitelists_lsh_bucket_selfjoin_by_key_attrs(self):
         # NOT the old literal prefix — a re-worded mode header must still
         # whitelist as long as the 2-key (band, bucket) shape is there.
         plan = self._plan(
@@ -320,18 +310,18 @@ class TestBroadcastAuditMatchers:
             ["+- Project [band#5, bucket#6, doc_id#7L]",
              "   +- Generate explode(sig#2), ..."],
         )
-        assert not audit.flag_positions(plan)
+        assert not plan_audits.is_content_broadcast(*plan)
 
-    def test_whitelists_enrichment_merchant_pivot(self, audit):
+    def test_whitelists_enrichment_merchant_pivot(self):
         plan = self._plan(
             "HashedRelationBroadcastMode(List(input[0, bigint, true]),false)",
             ["+- HashAggregate(keys=[merchant_id#90L], "
              "functions=[pivotfirst(metric#14, sum(vi)#25L, ...)])",
              "   +- Generate explode(metrics#8), ..."],
         )
-        assert not audit.flag_positions(plan)
+        assert not plan_audits.is_content_broadcast(*plan)
 
-    def test_one_key_band_bucket_lookalike_still_flagged(self, audit):
+    def test_one_key_band_bucket_lookalike_still_flagged(self):
         # A 1-key broadcast whose subtree merely MENTIONS band/bucket
         # attributes is not the adjudicated self-join.
         plan = self._plan(
@@ -339,4 +329,56 @@ class TestBroadcastAuditMatchers:
             ["+- HashAggregate(keys=[band#5, bucket#6], functions=[collect_list(gram#9)])",
              "   +- Generate explode(shingles#2), ..."],
         )
-        assert audit.flag_positions(plan)
+        assert plan_audits.is_content_broadcast(*plan)
+
+
+class TestBroadcastAuditLivePlans:
+    """The same audit on plans Spark really builds: red on a broadcast
+    token-count table, green on a broadcast scalar over the same tokens
+    (row-bounded), and green on the two adjudicated shapes — the LSH
+    (band, bucket) self-join without candidate_pairs' checkpoint, and the
+    e1 shred's merchant pivot.  Each case first shows the plan does hold
+    a content-derived broadcast, so a green result is the whitelist or
+    the bound clearing it."""
+
+    @staticmethod
+    def _frame(spark, sf_dir, shape):
+        from data_etl_scripts_showcase__spark.enrichment import enrich, mock_fetch_page
+        from data_etl_scripts_showcase__spark.operators import dedup as DD
+        from data_etl_scripts_showcase__spark.plans.pipelines import shred_enriched
+
+        docs = load_table(spark, sf_dir, "documents")
+        toks = docs.select("doc_id", F.explode(F.split("text", " ")).alias("tok"))
+        if shape == "token_counts":
+            counts = toks.groupBy("tok").agg(F.count("*").alias("n"))
+            return toks.join(F.broadcast(counts), "tok")
+        if shape == "token_scalar":
+            vocab = toks.agg(F.countDistinct("tok").alias("vsz"))
+            return toks.crossJoin(F.broadcast(vocab))
+        if shape == "lsh_selfjoin":
+            bands = DD.lsh_buckets(DD.minhash_signature(docs, "doc_id", "text"), "doc_id")
+            a = bands.select("band", "bucket", F.col("doc_id").alias("id_a"))
+            b = bands.select("band", "bucket", F.col("doc_id").alias("id_b"))
+            return a.join(F.broadcast(b), ["band", "bucket"])
+        keys = load_table(spark, sf_dir, "customer").select(
+            F.col("c_custkey").alias("merchant_id")
+        ).where("merchant_id < 40")  # a plan no other test caches
+        return shred_enriched(enrich(keys, "merchant_id", mock_fetch_page), "merchant_id")
+
+    @pytest.mark.parametrize(
+        "shape, flagged",
+        [
+            ("token_counts", True),
+            ("token_scalar", False),
+            ("lsh_selfjoin", False),
+            ("merchant_pivot", False),
+        ],
+    )
+    def test_audit_on_content_broadcast(self, spark, sf_dir, shape, flagged):
+        jplan = self._frame(spark, sf_dir, shape)._jdf.queryExecution().executedPlan()
+        assert any(
+            plan_audits.CONTENT_RE.search(n.toString().partition("\n")[2])
+            for n in plan_audits.walk(jplan)
+            if plan_audits._name(n) == "BroadcastExchangeExec"
+        )
+        assert bool(plan_audits.content_broadcasts(jplan)) == flagged

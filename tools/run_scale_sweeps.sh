@@ -72,11 +72,6 @@ if [ "$TIER" = "longdocs" ]; then
   SPARK_GRAFT_GATE_VIA_PARQUET=1 SPARK_GRAFT_ORACLE_CACHE="$OCACHE" \
     python tools/check_correctness.py /tmp/spark_graft_scale/longdocs_L128 \
       d18_containment_pairs d22_lsh_scurve_audit
-  # VERDICT r9 #3: the t14 estimate diverges with doc LENGTH, so the
-  # broadcast audit must run where the class actually manifests — the
-  # x128 length tier — not just the 10x volume dir.
-  echo "[scale-sweeps] broadcast audit on the longdocs x128 dir"
-  python tools/broadcast_audit.py /tmp/spark_graft_scale/longdocs_L128
 fi
 
 # Hot-key SKEW axis (round 7): the volume tiers are uniform; this tier
