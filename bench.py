@@ -86,7 +86,7 @@ HEADLINE = [
     # round-2 additions:
     "x38_zone_map_pruning",  # file-level min/max pruning statistic
     "x39_global_row_ids",  # distributed zipWithIndex
-    "pr4_cc_alternating",  # O(log n) large-star/small-star CC
+    "pr4_cc_alternating",  # min-label CC over a checkpointed edge leaf
     "a28_histogram_quantile_audit",  # mergeable histogram quantiles
     "io10_compaction_roundtrip",  # small-file OPTIMIZE through the read path
     "d21_url_canonical_dedup",  # crawl URL canonicalization dedup

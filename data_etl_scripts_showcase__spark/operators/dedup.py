@@ -280,6 +280,34 @@ def jaccard(col_a: Column, col_b: Column) -> Column:
     )
 
 
+def verified_pairs(docs: DataFrame) -> DataFrame:
+    """The verified near-dup edge list of a ``documents`` frame:
+    (id_a, id_b) with id_a < id_b and word-3-gram Jaccard ≥ 0.5.
+
+    MinHash signatures → LSH candidates → exact Jaccard on the candidates
+    only: the edge builder every near-dup graph query shares.  The
+    signature's input parallelism is the session's default (see
+    minhash_signature)."""
+    grams = docs.select("doc_id", tokens("text").alias("_toks")).select(
+        "doc_id", ngrams_from_tokens(F.col("_toks")).alias("grams")
+    )
+    sig = minhash_signature(
+        docs,
+        "doc_id",
+        "text",
+        parallelism=docs.sparkSession.sparkContext.defaultParallelism,
+    )
+    cand = candidate_pairs(lsh_buckets(sig, "doc_id"), "doc_id")
+    ga = grams.select(F.col("doc_id").alias("id_a"), F.col("grams").alias("grams_a"))
+    gb = grams.select(F.col("doc_id").alias("id_b"), F.col("grams").alias("grams_b"))
+    return (
+        cand.join(ga, "id_a")
+        .join(gb, "id_b")
+        .where(jaccard(F.col("grams_a"), F.col("grams_b")) >= 0.5)
+        .select("id_a", "id_b")
+    )
+
+
 def simhash32(
     df: DataFrame, id_col: str, text_col: str, parallelism: int | None = None
 ) -> DataFrame:

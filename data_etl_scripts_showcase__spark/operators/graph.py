@@ -2,19 +2,21 @@
 
 The greedy min-id survivor rule (queries/dedup.d8) under-merges when near-
 dup relations chain (A~B, B~C but not A~C).  The exact grouping is the
-connected components of the near-dup pair graph — the one genuinely
-ITERATIVE computation in the engine, implemented as the classic
-label-propagation-to-minimum loop on DataFrames:
+connected components of the near-dup pair graph, computed by ONE operator,
+:func:`connected_components` — the classic label-propagation-to-minimum
+loop on DataFrames:
 
     label(v) ← min(label(v), min over neighbors' labels)   until fixpoint
 
 Each iteration is one join + one aggregate (both shuffle on the node id, so
 the exchange is reused); convergence needs O(component diameter) rounds —
-near-dup clusters are shallow, so this is 2-4 rounds in practice.  Results
-are checkpointed per round and the loop early-exits when an exact O(1)-row
-monotone-sum probe over the new state says nothing changed (round 10: the
-old per-round old⋈new join+count job was strictly dearer evidence of the
-same fact).
+near-dup clusters are shallow: 2 rounds on the sf0.01 and sf0.1 near-dup
+graphs (SCALE.md, "Connected components").  Results are checkpointed per
+round and the loop early-exits when an exact O(1)-row monotone-sum probe
+over the new state says nothing changed (round 10: the old per-round
+old⋈new join+count job was strictly dearer evidence of the same fact).
+A graph deeper than ``max_iter`` rounds RAISES instead of returning split
+components (:func:`_raise_if_unconverged`; :func:`bfs_hops` likewise).
 This is the standard MapReduce/Pregel CC formulation and scales to any
 graph whose nodes fit the cluster (100 TB of edges is fine; the state is
 one row per node).
@@ -22,7 +24,6 @@ one row per node).
 
 from __future__ import annotations
 
-import warnings
 from contextlib import contextmanager
 
 from pyspark.sql import DataFrame
@@ -82,21 +83,16 @@ def _require_numeric_ids(op: str, dtype: str) -> None:
         )
 
 
-def _warn_if_unconverged(op: str, converged: bool, max_iter: int) -> None:
-    """Iterative loops must not exit SILENTLY when max_iter runs out before
-    the fixpoint — the returned labels/distances would be incorrect with no
-    signal.  A warning (not an exception) keeps partial results inspectable
-    while making the truncation visible to callers, who should raise
-    ``max_iter``.  (The alternating-CC digest is (count, bit_xor(xxhash64))
-    — collisions are possible in principle; a colliding round would also
-    surface here as premature 'convergence' only with matching count+hash.)
-    """
+def _raise_if_unconverged(op: str, converged: bool, max_iter: int) -> None:
+    """Iterative loops must not return when max_iter runs out before the
+    fixpoint: the labels/distances would be wrong (a cluster split in two,
+    a hop count missing) with nothing downstream able to tell.  Exhaustion
+    is a failure of the run — the graph is deeper than ``max_iter`` rounds
+    reach — so raise, naming the knob."""
     if not converged:
-        warnings.warn(
-            f"{op}: max_iter={max_iter} exhausted before fixpoint — "
-            f"results may be incomplete; raise max_iter",
-            RuntimeWarning,
-            stacklevel=3,
+        raise RuntimeError(
+            f"{op}: max_iter={max_iter} exhausted before fixpoint — the "
+            f"graph needs more rounds; raise max_iter"
         )
 
 
@@ -200,6 +196,9 @@ def connected_components(
 
     Deterministic: the fixpoint labeling is unique regardless of
     partitioning or iteration interleaving (min is idempotent/commutative).
+    Raises RuntimeError when ``max_iter`` rounds end before the fixpoint:
+    some node lies ``max_iter`` or more hops from its component's minimum
+    id (a 20-node path numbered end to end needs 20 rounds).
     """
     e = edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
     # The Σ-component convergence probe needs numeric node ids: a
@@ -281,141 +280,7 @@ def connected_components(
             converged = True
             break
         prev_sum = cur_sum
-    _warn_if_unconverged("connected_components", converged, max_iter)
-    return labels
-
-
-def connected_components_alternating(
-    edges: DataFrame, src: str = "src", dst: str = "dst", max_iter: int = 12
-) -> DataFrame:
-    """Connected components via alternating large-star/small-star rounds
-    → (id, component = component min id).
-
-    The min-label propagation above (:func:`connected_components`) needs
-    O(component diameter) rounds — fine for shallow near-dup clusters,
-    quadratic pain on a 100 TB graph with a long chain.  The alternating
-    algorithm (Kiveris et al. 2014, "Connected Components in MapReduce and
-    Beyond") converges in O(log n) rounds regardless of diameter by
-    rewiring the edge set itself toward a star per component:
-
-      large-star: every neighbor v > u is re-pointed at m(u) = min(N(u) ∪ u)
-      small-star: every neighbor v ≤ u (and u) is re-pointed at m(u)
-
-    Both steps are one groupBy(min) + one self-join on the node id — the
-    exchange is reused between them — and both strictly preserve
-    connectivity while never increasing the edge count.  At the fixpoint
-    every edge is (component-min, member), read off as the labeling.
-
-    Fixpoint detection: edge-set equality between rounds, checked with a
-    single aggregate (count + bit_xor of xxhash64(u, v) — order-free, overflow-free) instead of a set
-    difference — one action per round, no second shuffle.  The labeling
-    itself is the unique CC fixpoint, so determinism matches
-    :func:`connected_components` exactly (asserted in tests).
-    """
-    # Callers with an expensive edge pipeline should pass a checkpointed
-    # leaf (pr4/pr5/pr7 do): ``canon`` feeds both the node set and the
-    # working edge set, so a non-leaf input computes twice.  Checkpointing
-    # canon HERE was measured a net loss (~0.4 s/run at sf0.1) for the
-    # common leaf-input case — a cheap projection does not earn a
-    # materialization.
-    canon = edges.select(
-        F.least(F.col(src), F.col(dst)).alias("u"),
-        F.greatest(F.col(src), F.col(dst)).alias("v"),
-    )
-    # node set from the RAW edges: a self-loop node has no non-loop edge
-    # but still belongs in the labeling (as its own singleton component).
-    nodes = (
-        canon.select(F.col("u").alias("id"))
-        .unionByName(canon.select(F.col("v").alias("id")))
-        .distinct()
-        .transform(ckpt)
-    )
-    cur = (
-        canon.where(F.col("u") != F.col("v"))
-        .distinct()
-        .transform(ckpt)
-    )
-
-    def _edge_digest(e: DataFrame):
-        row = e.agg(
-            F.count("*").alias("n"),
-            F.bit_xor(F.xxhash64("u", "v")).alias("h"),
-        ).collect()[0]
-        return (row["n"], row["h"])
-
-    def _star(e: DataFrame, large: bool) -> DataFrame:
-        sym = e.select("u", "v").unionByName(
-            e.select(F.col("v").alias("u"), F.col("u").alias("v"))
-        )
-        mins = sym.groupBy("u").agg(
-            F.least(F.min("v"), F.first("u")).alias("m")
-        )
-        # Pinned shuffled-hash (round 11): the checkpointed leaves carry
-        # join-product size estimates, so Catalyst planned this round
-        # join as SortMergeJoin in r10 (the pr4 dumps show the flip) —
-        # two wasted sorts per star.  A/B at sf0.1: SHJ ~0.85 s/round vs
-        # broadcast ~1.35 s (driver-side broadcast build dominates) vs
-        # r10's SMJ in between; and SHJ is the only one of the three
-        # that is also safe when the graph is 100 TB.  The groupBy above
-        # and this join share the hash-on-u exchange.  The hint sits on
-        # the join side only: on the small-star union branch below Spark
-        # would discard it (HintErrorLogger: not part of a join).
-        j = sym.join(mins.hint("shuffle_hash"), "u")
-        if large:
-            out = j.where(F.col("v") > F.col("u")).select(
-                F.col("v").alias("a"), F.col("m").alias("b")
-            )
-        else:
-            out = j.where(F.col("v") <= F.col("u")).select(
-                F.col("v").alias("a"), F.col("m").alias("b")
-            ).unionByName(
-                mins.select(F.col("u").alias("a"), F.col("m").alias("b"))
-            )
-        return (
-            out.where(F.col("a") != F.col("b"))
-            .select(
-                F.least("a", "b").alias("u"), F.greatest("a", "b").alias("v")
-            )
-            .distinct()
-        )
-
-    # each _star references its input in a self-join (sym ⋈ mins(sym)), so
-    # the LOGICAL plan grows ~16× per round — caching truncates execution
-    # but not the plan tree, and Catalyst chokes on the exponential tree
-    # after a few rounds.  localCheckpoint materializes the round AND cuts
-    # the lineage to a leaf, keeping every round's plan constant-size.
-    # (On a cluster, swap for rdd.checkpoint() if executor loss during the
-    # loop must be survivable.)
-    digest = _edge_digest(cur)
-    fixed = False
-    for _ in range(max_iter):
-        # both stars never increase the edge count, so the incoming
-        # round's digest count bounds both stages' relations — it sizes
-        # the round's shuffles (see _sized_loop_shuffle; the scope covers
-        # the localCheckpoint call because physical planning reads
-        # shuffle.partitions there).
-        with _sized_loop_shuffle(cur, 2 * digest[0]):
-            nxt = _star(_star(cur, large=True), large=False).transform(ckpt)
-            nxt_digest = _edge_digest(nxt)
-        cur = nxt
-        if nxt_digest == digest:
-            fixed = True
-            break
-        digest = nxt_digest
-    _warn_if_unconverged("connected_components_alternating", fixed, max_iter)
-
-    # fixpoint: every edge is (component-min, member); roots label themselves.
-    member_labels = cur.groupBy(F.col("v").alias("id")).agg(
-        F.min("u").alias("_c")
-    )
-    # Pinned shuffled-hash, same rationale as the loop joins: the leaf
-    # estimates are garbage, SMJ pays sorts, and a broadcast build was
-    # measured slower than the coalesced hash join at bench scale while
-    # being node-scaled-unsafe at 100 TB.
-    member_labels = member_labels.hint("shuffle_hash")
-    labels = nodes.join(member_labels, "id", "left").select(
-        "id", F.coalesce(F.col("_c"), F.col("id")).alias("component")
-    )
+    _raise_if_unconverged("connected_components", converged, max_iter)
     return labels
 
 
@@ -437,7 +302,7 @@ def bfs_hops(
     1 row per reached node.  Distances are a unique fixpoint (min over
     monotone candidates), so the result is deterministic under any
     partitioning, and every round localCheckpoints to keep the plan
-    constant-size (same lineage discipline as the CC loops above).
+    constant-size (same lineage discipline as the CC loop above).
     """
     e = edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
     # localCheckpoint, not persist (round 10): the leaf plan keeps each
@@ -473,7 +338,7 @@ def bfs_hops(
     # must budget for it.  The count doubles as sym's materializing
     # action (it is a lazy checkpoint).
     n_sym = sym.count()
-    converged = False  # max_iter <= 0 must hit the convergence warning
+    converged = False  # max_iter <= 0 must hit the convergence check
     # below, not a NameError (mirrors connected_components).
     for _ in range(max_iter):
         # Pinned shuffled-hash (round 11): same rationale as the CC
@@ -498,5 +363,5 @@ def bfs_hops(
             converged = True
             break
         prev = cur
-    _warn_if_unconverged("bfs_hops", converged, max_iter)
+    _raise_if_unconverged("bfs_hops", converged, max_iter)
     return dist

@@ -321,20 +321,7 @@ def d8_dedup_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
     list is genuinely small, and shuffles by doc_id when it isn't —
     which a forced hint would have pinned into executor-memory risk."""
     docs = load_table(spark, sf_dir, "documents")
-    grams = docs.select("doc_id", DD.tokens("text").alias("_toks")).select(
-        "doc_id", DD.ngrams_from_tokens(F.col("_toks")).alias("grams")
-    )
-    sig = DD.minhash_signature(
-        docs, "doc_id", "text", parallelism=spark.sparkContext.defaultParallelism
-    )
-    cand = DD.candidate_pairs(DD.lsh_buckets(sig, "doc_id"), "doc_id")
-    ga = grams.select(F.col("doc_id").alias("id_a"), F.col("grams").alias("grams_a"))
-    gb = grams.select(F.col("doc_id").alias("id_b"), F.col("grams").alias("grams_b"))
-    verified = (
-        cand.join(ga, "id_a")
-        .join(gb, "id_b")
-        .where(DD.jaccard(F.col("grams_a"), F.col("grams_b")) >= 0.5)
-    )
+    verified = DD.verified_pairs(docs)
     drops = verified.select(F.col("id_b").alias("doc_id")).distinct()
     flagged = docs.join(
         drops.withColumn("_drop", F.lit(1)), "doc_id", "left"
@@ -384,21 +371,7 @@ def d9_neardup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.graph import connected_components
 
     docs = load_table(spark, sf_dir, "documents")
-    grams = docs.select("doc_id", DD.tokens("text").alias("_toks")).select(
-        "doc_id", DD.ngrams_from_tokens(F.col("_toks")).alias("grams")
-    )
-    sig = DD.minhash_signature(
-        docs, "doc_id", "text", parallelism=spark.sparkContext.defaultParallelism
-    )
-    cand = DD.candidate_pairs(DD.lsh_buckets(sig, "doc_id"), "doc_id")
-    ga = grams.select(F.col("doc_id").alias("id_a"), F.col("grams").alias("grams_a"))
-    gb = grams.select(F.col("doc_id").alias("id_b"), F.col("grams").alias("grams_b"))
-    verified = (
-        cand.join(ga, "id_a")
-        .join(gb, "id_b")
-        .where(DD.jaccard(F.col("grams_a"), F.col("grams_b")) >= 0.5)
-        .select("id_a", "id_b")
-    )
+    verified = DD.verified_pairs(docs)
     return connected_components(verified, "id_a", "id_b").select(
         F.col("id").alias("doc_id"), "component"
     )
@@ -955,28 +928,15 @@ def d15_leakage_safe_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-doc splits (x13 splits per-row; this is the content-aware form).
     Leakage-zero is asserted pair-by-pair in tests.
 
-    Scale shape: components state is 1 row/doc (operators/graph.py
-    min-label propagation); the split itself is one md5 of the group key
-    — no extra shuffle beyond the component computation that dedup
-    already runs."""
+    Scale shape: components state is 1 row/doc
+    (operators/graph.connected_components over
+    operators/dedup.verified_pairs); the split itself is one md5 of the
+    group key — no extra shuffle beyond the component computation that
+    dedup already runs."""
     from ..operators.graph import connected_components
 
     docs = load_table(spark, sf_dir, "documents")
-    grams = docs.select("doc_id", DD.tokens("text").alias("_toks")).select(
-        "doc_id", DD.ngrams_from_tokens(F.col("_toks")).alias("grams")
-    )
-    sig = DD.minhash_signature(
-        docs, "doc_id", "text", parallelism=spark.sparkContext.defaultParallelism
-    )
-    cand = DD.candidate_pairs(DD.lsh_buckets(sig, "doc_id"), "doc_id")
-    ga = grams.select(F.col("doc_id").alias("id_a"), F.col("grams").alias("grams_a"))
-    gb = grams.select(F.col("doc_id").alias("id_b"), F.col("grams").alias("grams_b"))
-    verified = (
-        cand.join(ga, "id_a")
-        .join(gb, "id_b")
-        .where(DD.jaccard(F.col("grams_a"), F.col("grams_b")) >= 0.5)
-        .select("id_a", "id_b")
-    )
+    verified = DD.verified_pairs(docs)
     comp = connected_components(verified, "id_a", "id_b")
     grouped = docs.join(comp, docs.doc_id == comp.id, "left").select(
         docs.doc_id,
@@ -1148,21 +1108,7 @@ def pr2_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.graph import triangles
 
     docs = load_table(spark, sf_dir, "documents")
-    grams = docs.select("doc_id", DD.tokens("text").alias("_toks")).select(
-        "doc_id", DD.ngrams_from_tokens(F.col("_toks")).alias("grams")
-    )
-    sig = DD.minhash_signature(
-        docs, "doc_id", "text", parallelism=spark.sparkContext.defaultParallelism
-    )
-    cand = DD.candidate_pairs(DD.lsh_buckets(sig, "doc_id"), "doc_id")
-    ga = grams.select(F.col("doc_id").alias("id_a"), F.col("grams").alias("grams_a"))
-    gb = grams.select(F.col("doc_id").alias("id_b"), F.col("grams").alias("grams_b"))
-    verified = (
-        cand.join(ga, "id_a")
-        .join(gb, "id_b")
-        .where(DD.jaccard(F.col("grams_a"), F.col("grams_b")) >= 0.5)
-        .select("id_a", "id_b")
-    )
+    verified = DD.verified_pairs(docs)
     # Round 10: localCheckpoint (not persist) — the four count branches
     # reference this relation repeatedly, and persist alone left the full
     # minhash/LSH lineage in the plan (~90 Exchange nodes of planning).
@@ -1383,21 +1329,7 @@ def d20_canonical_selection(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators import text as TX
 
     docs = load_table(spark, sf_dir, "documents")
-    grams = docs.select("doc_id", DD.tokens("text").alias("_toks")).select(
-        "doc_id", DD.ngrams_from_tokens(F.col("_toks")).alias("grams")
-    )
-    sig = DD.minhash_signature(
-        docs, "doc_id", "text", parallelism=spark.sparkContext.defaultParallelism
-    )
-    cand = DD.candidate_pairs(DD.lsh_buckets(sig, "doc_id"), "doc_id")
-    ga = grams.select(F.col("doc_id").alias("id_a"), F.col("grams").alias("grams_a"))
-    gb = grams.select(F.col("doc_id").alias("id_b"), F.col("grams").alias("grams_b"))
-    verified = (
-        cand.join(ga, "id_a")
-        .join(gb, "id_b")
-        .where(DD.jaccard(F.col("grams_a"), F.col("grams_b")) >= 0.5)
-        .select("id_a", "id_b")
-    )
+    verified = DD.verified_pairs(docs)
     comp = connected_components(verified, "id_a", "id_b").select(
         F.col("id").alias("doc_id"), "component"
     )

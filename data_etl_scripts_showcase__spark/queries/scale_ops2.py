@@ -1,5 +1,5 @@
 """Round-2 scale-infrastructure operators: zone-map pruning, distributed
-row-id assignment, and O(log n) connected components.
+row-id assignment, and near-dup graph analytics.
 
 Same charter as scale_ops.py — operations a 100 TB training-data pipeline
 leans on daily, expressed as pure DataFrame aggregates with deterministic
@@ -12,9 +12,8 @@ outputs so the DuckDB oracle reproduces every bit:
 - x39: global contiguous row ids WITHOUT a single-partition global sort —
   the distributed zipWithIndex every training-data pipeline needs for
   stable example ids.
-- pr4: connected components by alternating large-star/small-star rounds
-  (Kiveris et al. 2014) — O(log n) rounds vs the min-label loop's
-  O(diameter), the CC formulation that survives long chains at 100 TB.
+- pr4: d9's near-dup connected components over a checkpointed edge
+  leaf (min-label propagation, operators/graph.connected_components).
 """
 
 from __future__ import annotations
@@ -185,7 +184,7 @@ def x39_global_row_ids(spark: SparkSession, sf_dir: str) -> DataFrame:
     return with_ids.select("o_orderkey", "row_id")
 
 
-# ------------------------------------------ pr4: alternating-rounds CC
+# ------------------------------- pr4: CC on a checkpointed edge leaf
 
 
 @register(
@@ -215,37 +214,24 @@ def x39_global_row_ids(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT id AS doc_id, CAST(min(r) AS BIGINT) AS component
     FROM reach GROUP BY id
     """,
-    survey="NS-dedup (connected components in O(log n) rounds — alternating large-star/small-star)",
+    survey="NS-dedup (connected components over a checkpointed near-dup edge leaf — min-label propagation)",
 )
 def pr4_cc_alternating(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Same dedup clusters as d9, computed by the alternating large-star/
-    small-star algorithm (operators/graph.connected_components_alternating)
-    instead of min-label propagation.  Both converge to the unique
-    min-id-per-component fixpoint — the oracle (recursive CTE transitive
-    closure) and d9 agree bit-for-bit — but the alternating form needs
-    O(log n) rounds where label propagation needs O(diameter): the version
-    to run when near-dup families chain into long paths at corpus scale."""
-    from ..operators.graph import connected_components_alternating
+    """d9's dedup clusters computed over a checkpointed edge leaf:
+    operators/graph.connected_components (min-label propagation) on the
+    verified pairs of operators/dedup.verified_pairs, materialized once,
+    so the label loop reads a leaf instead of the LSH verify lineage.
+    The oracle (recursive CTE transitive closure) and d9 agree
+    bit-for-bit: both converge to the unique min-id-per-component
+    fixpoint.  The registry name is historical, kept as a stable key of
+    the bench headline and the scale sweeps."""
+    from ..operators.graph import connected_components
 
     docs = load_table(spark, sf_dir, "documents")
-    grams = docs.select("doc_id", DD.tokens("text").alias("_toks")).select(
-        "doc_id", DD.ngrams_from_tokens(F.col("_toks")).alias("grams")
-    )
-    sig = DD.minhash_signature(
-        docs, "doc_id", "text", parallelism=spark.sparkContext.defaultParallelism
-    )
-    cand = DD.candidate_pairs(DD.lsh_buckets(sig, "doc_id"), "doc_id")
-    ga = grams.select(F.col("doc_id").alias("id_a"), F.col("grams").alias("grams_a"))
-    gb = grams.select(F.col("doc_id").alias("id_b"), F.col("grams").alias("grams_b"))
-    verified = (
-        cand.join(ga, "id_a")
-        .join(gb, "id_b")
-        .where(DD.jaccard(F.col("grams_a"), F.col("grams_b")) >= 0.5)
-        .select("id_a", "id_b")
-    ).transform(ckpt)  # round 10: the CC operator references
-    # its input twice (node set + working edges) — hand it a leaf so the
-    # LSH verify pipeline runs once (pr5/pr7's idiom).
-    return connected_components_alternating(verified, "id_a", "id_b").select(
+    # the CC operator's symmetric edge list reads its input twice — hand
+    # it a leaf so the LSH verify pipeline runs once (pr5/pr7's idiom).
+    verified = DD.verified_pairs(docs).transform(ckpt)
+    return connected_components(verified, "id_a", "id_b").select(
         F.col("id").alias("doc_id"), "component"
     )
 
@@ -869,28 +855,14 @@ def pr5_bfs_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
     one edge join + one keyed min; rounds = max cluster eccentricity, 1
     row/node state).  The fourth iterative graph algorithm on the shared
     edge pipeline (CC, PageRank, label propagation, BFS); the oracle
-    walks the same graph from the same roots via recursive CTE."""
-    from ..operators.graph import bfs_hops
+    walks the same graph from the same roots via recursive CTE.  The
+    roots are the minima of operators/graph.connected_components over the
+    same checkpointed edge leaf."""
+    from ..operators.graph import bfs_hops, connected_components
 
     docs = load_table(spark, sf_dir, "documents")
-    grams = docs.select("doc_id", DD.tokens("text").alias("_toks")).select(
-        "doc_id", DD.ngrams_from_tokens(F.col("_toks")).alias("grams")
-    )
-    sig = DD.minhash_signature(
-        docs, "doc_id", "text", parallelism=spark.sparkContext.defaultParallelism
-    )
-    cand = DD.candidate_pairs(DD.lsh_buckets(sig, "doc_id"), "doc_id")
-    ga = grams.select(F.col("doc_id").alias("id_a"), F.col("grams").alias("grams_a"))
-    gb = grams.select(F.col("doc_id").alias("id_b"), F.col("grams").alias("grams_b"))
-    verified = (
-        cand.join(ga, "id_a")
-        .join(gb, "id_b")
-        .where(DD.jaccard(F.col("grams_a"), F.col("grams_b")) >= 0.5)
-        .select("id_a", "id_b")
-    ).transform(ckpt)
-    from ..operators.graph import connected_components_alternating
-
-    comps = connected_components_alternating(verified, "id_a", "id_b")
+    verified = DD.verified_pairs(docs).transform(ckpt)
+    comps = connected_components(verified, "id_a", "id_b")
     sources = comps.where(F.col("id") == F.col("component")).select("id")
     return bfs_hops(verified, sources, "id_a", "id_b").select(
         F.col("id").alias("doc_id"), "hops"
@@ -1175,21 +1147,7 @@ def pr6_khop_neighbor_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     the x41 discipline applied to edges.  Plan: one ranked window over
     the symmetric edge list, hop-2 by self-join of the capped hop-1."""
     docs = load_table(spark, sf_dir, "documents")
-    grams = docs.select("doc_id", DD.tokens("text").alias("_toks")).select(
-        "doc_id", DD.ngrams_from_tokens(F.col("_toks")).alias("grams")
-    )
-    sig = DD.minhash_signature(
-        docs, "doc_id", "text", parallelism=spark.sparkContext.defaultParallelism
-    )
-    cand = DD.candidate_pairs(DD.lsh_buckets(sig, "doc_id"), "doc_id")
-    ga = grams.select(F.col("doc_id").alias("id_a"), F.col("grams").alias("grams_a"))
-    gb = grams.select(F.col("doc_id").alias("id_b"), F.col("grams").alias("grams_b"))
-    verified = (
-        cand.join(ga, "id_a")
-        .join(gb, "id_b")
-        .where(DD.jaccard(F.col("grams_a"), F.col("grams_b")) >= 0.5)
-        .select("id_a", "id_b")
-    )
+    verified = DD.verified_pairs(docs)
     e = verified.select(F.col("id_a").alias("a"), F.col("id_b").alias("b"))
     sym = e.unionByName(
         e.select(F.col("b").alias("a"), F.col("a").alias("b"))
@@ -1747,30 +1705,17 @@ def pr7_partition_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
     float-summation-order caveat.  Q near 1 = many small tight clusters
     (healthy dedup graph); Q near 0 = one giant hairball (an LSH banding
     bug or a boilerplate epidemic — d22's S-curve audit tells you which).
-    Plan: the edge pipeline is pr1-pr6's shared capped-degree build; the
+    Plan: the edges are operators/dedup.verified_pairs, checkpointed;
+    the partition is operators/graph.connected_components over them; the
     modularity itself adds two hash aggregates and a broadcast scalar."""
-    from ..operators.graph import connected_components_alternating
+    from ..operators.graph import connected_components
 
     docs = load_table(spark, sf_dir, "documents")
-    grams = docs.select("doc_id", DD.tokens("text").alias("_toks")).select(
-        "doc_id", DD.ngrams_from_tokens(F.col("_toks")).alias("grams")
-    )
-    sig = DD.minhash_signature(
-        docs, "doc_id", "text", parallelism=spark.sparkContext.defaultParallelism
-    )
-    cand = DD.candidate_pairs(DD.lsh_buckets(sig, "doc_id"), "doc_id")
-    ga = grams.select(F.col("doc_id").alias("id_a"), F.col("grams").alias("grams_a"))
-    gb = grams.select(F.col("doc_id").alias("id_b"), F.col("grams").alias("grams_b"))
-    verified = (
-        cand.join(ga, "id_a")
-        .join(gb, "id_b")
-        .where(DD.jaccard(F.col("grams_a"), F.col("grams_b")) >= 0.5)
-        .select("id_a", "id_b")
-    ).transform(ckpt)  # round 10: referenced by CC (twice),
-    # sym (twice) and the edge count — checkpointing computes the LSH
-    # verify pipeline once instead of ~5× and keeps the plan leaf-sized
-    # (pr5 already used this idiom).
-    labels = connected_components_alternating(verified, "id_a", "id_b")
+    # round 10: referenced by CC (twice), sym (twice) and the edge count —
+    # checkpointing computes the LSH verify pipeline once instead of ~5×
+    # and keeps the plan leaf-sized (pr5 already used this idiom).
+    verified = DD.verified_pairs(docs).transform(ckpt)
+    labels = connected_components(verified, "id_a", "id_b")
     sym = verified.select(
         F.col("id_a").alias("id"), F.col("id_b").alias("nbr")
     ).unionByName(

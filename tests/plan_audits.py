@@ -33,7 +33,7 @@ for the engine-wide plan properties:
   so it under-estimates without bound as documents grow, and a
   statically planned broadcast is a leaf query stage under AQE that
   runtime statistics never demote.  The walk reaches AQE's initial plan,
-  where every static broadcast sits.
+  where every static broadcast sits, and the plan behind every cache hit.
 
 Queries whose build functions EXECUTE an action (streaming start, file write,
 raising gate) are audited on their registered batch fragment
@@ -193,10 +193,19 @@ def walk(node):
     for every plan containing an exchange).  Recurse through its
     ``initialPlan()`` — the EnsureRequirements-applied physical plan,
     where ShuffleExchangeExec / WindowExec nodes are visible before
-    runtime re-optimization."""
+    runtime re-optimization.
+
+    ``InMemoryTableScanExec`` is a leaf too: a cache hit replaces the
+    cached frame's whole plan with one scan.  Recurse through
+    ``relation().cachedPlan()``, the physical plan that filled the cache,
+    so a query that persists an intermediate and reads it back is audited
+    on that plan as well."""
     yield node
     if _name(node) == "AdaptiveSparkPlanExec":
         yield from walk(node.initialPlan())
+        return
+    if _name(node) == "InMemoryTableScanExec":
+        yield from walk(node.relation().cachedPlan())
         return
     ch = node.children()
     for i in range(ch.size()):

@@ -30,7 +30,7 @@ CLUSTER_SLICE = [
     "udf1_pandas_scalar_address",  # Arrow pandas UDF on executor workers
     "io7_python_datasource_pages",  # Python DataSource partitions on executors
     "st3_session_windows",  # streaming micro-batches + state store
-    "pr4_cc_alternating",  # iterative joins + localCheckpoint per round
+    "pr4_cc_alternating",  # min-label CC: one join + localCheckpoint per round
     "mm2_decoded_features",  # mapInPandas binary decode
 ]
 

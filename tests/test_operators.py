@@ -770,18 +770,7 @@ class TestLeakageSafeSplit:
 
         SF = "/root/testdata/sf0.001"
         docs = load_table(spark, SF, "documents")
-        grams = docs.select("doc_id", TX.tokens("text").alias("_t")).select(
-            "doc_id", DD.ngrams_from_tokens(F.col("_t")).alias("grams")
-        )
-        sig = DD.minhash_signature(docs, "doc_id", "text")
-        cand = DD.candidate_pairs(DD.lsh_buckets(sig, "doc_id"), "doc_id")
-        ga = grams.select(F.col("doc_id").alias("id_a"), F.col("grams").alias("ga"))
-        gb = grams.select(F.col("doc_id").alias("id_b"), F.col("grams").alias("gb"))
-        verified = (
-            cand.join(ga, "id_a").join(gb, "id_b")
-            .where(DD.jaccard(F.col("ga"), F.col("gb")) >= 0.5)
-            .select("id_a", "id_b")
-        )
+        verified = DD.verified_pairs(docs)
         assert verified.count() > 0  # invariant is non-vacuous on this data
 
         comp = connected_components(verified, "id_a", "id_b")
@@ -1129,45 +1118,42 @@ class TestCdcIncrementalMerge:
 
 
 class TestAlternatingCC:
-    """connected_components_alternating ≡ connected_components (r2 pr4)."""
+    """connected_components on the shapes pr4_cc_alternating was built
+    for (the class keeps that registry name, as the query does)."""
 
-    def _both(self, spark, rows):
+    def _labels(self, spark, rows, **kw):
         from data_etl_scripts_showcase__spark.operators.graph import (
             connected_components,
-            connected_components_alternating,
         )
 
         e = spark.createDataFrame(rows, "src bigint, dst bigint")
-        a = {
-            (r.id, r.component)
-            for r in connected_components(e).collect()
-        }
-        b = {
-            (r.id, r.component)
-            for r in connected_components_alternating(e).collect()
-        }
-        return a, b
+        return {(r.id, r.component) for r in connected_components(e, **kw).collect()}
 
     def test_long_chain_matches_label_propagation(self, spark):
-        # a 12-node path — the diameter case the alternating form exists
-        # for: label propagation needs ~12 rounds, alternating ~log2(12).
+        # a 12-node path: min-label propagation needs 11 rounds to carry
+        # label 1 to node 12, plus the round that sees no change.
         rows = [(i, i + 1) for i in range(1, 12)] + [(20, 21), (30, 30)]
-        a, b = self._both(spark, rows)
-        assert a == b
-        assert {c for _, c in a} == {1, 20, 30} - {30} | {30}
+        assert self._labels(spark, rows) == (
+            {(i, 1) for i in range(1, 13)} | {(20, 20), (21, 20), (30, 30)}
+        )
 
     def test_star_and_cycle(self, spark):
         rows = [(1, k) for k in (2, 3, 4, 5)] + [(10, 11), (11, 12), (12, 10)]
-        a, b = self._both(spark, rows)
-        assert a == b
         comps = {}
-        for node, c in b:
+        for node, c in self._labels(spark, rows):
             comps.setdefault(c, set()).add(node)
         assert comps == {1: {1, 2, 3, 4, 5}, 10: {10, 11, 12}}
 
     def test_reversed_and_duplicate_edges(self, spark):
-        a, b = self._both(spark, [(2, 1), (1, 2), (2, 3), (3, 2), (5, 4)])
-        assert a == b == {(1, 1), (2, 1), (3, 1), (4, 4), (5, 4)}
+        rows = [(2, 1), (1, 2), (2, 3), (3, 2), (5, 4)]
+        assert self._labels(spark, rows) == {(1, 1), (2, 1), (3, 1), (4, 4), (5, 4)}
+
+    def test_path_deeper_than_max_iter_raises(self, spark):
+        """A 20-node path needs 20 rounds; 15 must fail loudly, not
+        return the path split into two components."""
+        rows = [(i, i + 1) for i in range(1, 20)]
+        with pytest.raises(RuntimeError, match="max_iter=15 exhausted"):
+            self._labels(spark, rows, max_iter=15)
 
 
 class TestGlobalRowIds:
@@ -1503,8 +1489,8 @@ class TestAdviceR3Fixes:
         with pytest.raises(Exception, match="bucket_col"):
             out.collect()
 
-    def test_bfs_hops_zero_iterations_warns_not_nameerror(self, spark):
-        """max_iter=0 must exit through the convergence warning (like
+    def test_bfs_hops_zero_iterations_raises_not_nameerror(self, spark):
+        """max_iter=0 must exit through the convergence check (like
         connected_components), never a NameError on `changed`."""
         import pytest
 
@@ -1512,9 +1498,8 @@ class TestAdviceR3Fixes:
 
         edges = spark.createDataFrame([(1, 2)], "src bigint, dst bigint")
         sources = spark.createDataFrame([(1,)], "id bigint")
-        with pytest.warns(RuntimeWarning, match="bfs_hops"):
-            got = bfs_hops(edges, sources, max_iter=0)
-            assert got.count() == 1  # sources only, no expansion ran
+        with pytest.raises(RuntimeError, match="bfs_hops: max_iter=0"):
+            bfs_hops(edges, sources, max_iter=0)
 
     def test_column_profile_exotic_column_names(self, spark):
         """Names with spaces, dots, quotes, and backticks must profile

@@ -64,7 +64,6 @@ def test_oracle_equivalence(spark, sf_dir, duck, hint_log, name):
         audited = df
         if name in FRAGMENTS:  # the frame that ran sits behind an action
             segments.clear()
-            df.unpersist()  # a cache hit would hide the fragment's plan
             audited = FRAGMENTS[name](spark, sf_dir)
         plans = [("final", audited._jdf.queryExecution().executedPlan()), *segments]
         errs = plan_audits.audit(name, df.schema, plans)

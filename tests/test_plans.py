@@ -348,6 +348,32 @@ class TestEngineWidePlanAudit:
         bad.collect()
         assert plan_audits.has_cartesian(bad._jdf.queryExecution().executedPlan())
 
+    def test_audits_see_behind_a_cache_hit(self, spark):
+        """A persisted frame holding a data cartesian and a text-carrying
+        shuffle, read back through a cache hit: the walk must reach both
+        through the InMemoryTableScan leaf, or every node-walking audit is
+        blind to a query that persists an intermediate."""
+        from data_etl_scripts_showcase__spark.sources import load_table
+
+        docs = load_table(spark, SF, "documents").select("doc_id", "text")
+        region = load_table(spark, SF, "region")
+        cached = (
+            docs.hint("shuffle_replicate_nl").crossJoin(region)
+            .repartition(3, "doc_id")
+            .persist()
+        )
+        try:
+            cached.count()
+            hit = cached.groupBy("r_name").count()
+            hit.collect()
+            jplan = hit._jdf.queryExecution().executedPlan()
+            names = {plan_audits._name(n) for n in plan_audits.walk(jplan)}
+            assert "InMemoryTableScanExec" in names  # it IS a cache hit
+            assert "CartesianProductExec" in names
+            assert plan_audits.offending_exchanges(jplan)
+        finally:
+            cached.unpersist()
+
     def test_an_audit_that_checked_nothing_is_vacuous(self, monkeypatch):
         """conftest fails the session on what vacuous_audits() returns:
         a covered query swept while one audit's count stayed at zero."""

@@ -536,7 +536,7 @@ def test_results_independent_of_shuffle_partitioning(spark):
         "x35_geo_radius_join",      # 2-D grid candidate join
         # round-2 families:
         "x39_global_row_ids",       # bucketed ordinal assignment
-        "pr4_cc_alternating",       # iterative edge rewriting
+        "pr4_cc_alternating",       # min-label CC loop on an edge leaf
         "x40_join_size_estimate",   # CMS inner product
         "x41_weighted_sample",      # hash-derived weighted top-k
         "mm10_phash_neardup",       # hamming band candidates
@@ -700,56 +700,6 @@ _SLOW_GRAPH = settings(
     deadline=None,
     suppress_health_check=[HealthCheck.function_scoped_fixture],
 )
-
-
-@_SLOW_GRAPH
-@given(
-    st.lists(
-        st.tuples(st.integers(0, 15), st.integers(0, 15)),
-        min_size=1,
-        max_size=25,
-    )
-)
-def test_cc_alternating_equals_min_label(spark, edges):
-    """Both CC formulations converge to the identical min-id-per-component
-    fixpoint on arbitrary graphs (self-loops, duplicates, any topology) —
-    the unique-fixpoint property that makes the O(log n) alternating form
-    a drop-in for the O(diameter) label loop."""
-    from data_etl_scripts_showcase__spark.operators.graph import (
-        connected_components,
-        connected_components_alternating,
-    )
-
-    df = spark.createDataFrame(edges, "src bigint, dst bigint")
-    a = {(r.id, r.component) for r in connected_components(df).collect()}
-    b = {
-        (r.id, r.component)
-        for r in connected_components_alternating(df).collect()
-    }
-    assert a == b
-
-    # reference: union-find on the driver
-    parent = {}
-
-    def find(x):
-        parent.setdefault(x, x)
-        while parent[x] != x:
-            parent[x] = parent[parent[x]]
-            x = parent[x]
-        return x
-
-    def union(x, y):
-        parent[find(x)] = find(y)
-
-    for u, v in edges:
-        union(u, v)
-    comps = {}
-    for node in parent:
-        comps.setdefault(find(node), set()).add(node)
-    expected = {
-        (n, min(members)) for members in comps.values() for n in members
-    }
-    assert b == expected
 
 
 @_SLOW_GRAPH

@@ -108,7 +108,7 @@ PROBE_QUERIES = [
     "v4_knn_ivf",  # IVF cell-probed ANN
     "t2_quality_score",  # per-doc text scoring
     "t25_content_defined_chunks",  # CDC rolling-hash chunking
-    "pr4_cc_alternating",  # iterative connected components
+    "pr4_cc_alternating",  # min-label CC over a checkpointed edge leaf
     "x44_distributed_deciles",  # exact ntile without global sort
     "x55_shard_manifest",  # token-budget prefix-sum packing
     "x57_seeded_epoch_shuffle",  # seeded per-epoch training order
@@ -260,7 +260,7 @@ SKEWPAIR_QUERIES = [
     "d12_semantic_dedup",  # label-blocked pair stage, hot label block
     "pr1_pagerank_neardup",  # pagerank with one dense component
     "pr2_triangle_count",  # triangle census: C(hot,3) by construction
-    "pr4_cc_alternating",  # alternating CC on the dense component
+    "pr4_cc_alternating",  # min-label CC on a checkpointed edge leaf
     "pr5_bfs_hops",  # multi-source BFS through the hot node
     "pr7_partition_modularity",  # modularity with one giant cluster
 ]
