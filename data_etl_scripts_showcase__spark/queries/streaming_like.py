@@ -12,7 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..sources import load_table
+from ..sources import footer_schema, load_table
 from ..streaming import (
     events_stream,
     final_user_activity,
@@ -762,7 +762,7 @@ def st18_streaming_dataset_card(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from ..streaming.jobs import read_dataset_card, streaming_dataset_card
 
-    file_schema = spark.read.parquet(f"{sf_dir}/documents.parquet").schema
+    file_schema = footer_schema(spark, sf_dir, "documents")
     src_path, src_glob = stream_source_path(sf_dir, "documents")
     stream = (
         spark.readStream.schema(file_schema)
@@ -798,7 +798,7 @@ def st19_stream_exact_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from ..streaming.jobs import streaming_exact_dedup
 
-    file_schema = spark.read.parquet(f"{sf_dir}/documents.parquet").schema
+    file_schema = footer_schema(spark, sf_dir, "documents")
     src_path, src_glob = stream_source_path(sf_dir, "documents")
     stream = (
         spark.readStream.schema(file_schema)
@@ -845,7 +845,7 @@ def st20_stream_neardup_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from ..streaming.jobs import streaming_neardup_gate
 
-    file_schema = spark.read.parquet(f"{sf_dir}/documents.parquet").schema
+    file_schema = footer_schema(spark, sf_dir, "documents")
     src_path, src_glob = stream_source_path(sf_dir, "documents")
     stream = (
         spark.readStream.schema(file_schema)
@@ -894,7 +894,7 @@ def st21_stream_shard_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from ..streaming.jobs import streaming_shard_manifest
 
-    file_schema = spark.read.parquet(f"{sf_dir}/documents.parquet").schema
+    file_schema = footer_schema(spark, sf_dir, "documents")
     src_path, src_glob = stream_source_path(sf_dir, "documents")
     stream = (
         spark.readStream.schema(file_schema)

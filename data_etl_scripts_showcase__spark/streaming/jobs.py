@@ -28,6 +28,7 @@ from pyspark.sql import functions as F
 
 from ..functions import dec2, ntz_epoch_us
 from ..ckpt import ckpt
+from ..sources import footer_schema
 
 #: State partitioning for the fresh-checkpoint drains below (VERDICT r8
 #: #5).  Stateful operators create one state-store instance PER SHUFFLE
@@ -89,8 +90,9 @@ def events_stream(
     measures per-batch state curves; queries leave it None (one batch).
 
     The parquet footer is authoritative (same rule as the batch loader,
-    sources/tables.py): resolve the file's actual schema with a batch footer
-    read, declare THAT as the stream schema.  A legacy nanos-stored file
+    sources/tables.py): take the file's footer schema from the batch
+    loader's bind (``footer_schema``: inferred and validated once per file
+    listing), declare THAT as the stream schema.  A legacy nanos-stored file
     surfaces `ts` as int64 and gets the same micros floor-division the batch
     loader applies; a TIMESTAMP(MICROS) file streams as-is.  One deviation:
     `ts` is declared TIMESTAMP (with zone) because watermarks reject
@@ -100,8 +102,7 @@ def events_stream(
     """
     from pyspark.sql import types as T
 
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    file_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
+    file_schema = footer_schema(spark, sf_dir, "events")
     ts_is_long = isinstance(file_schema["ts"].dataType, T.LongType)
     stream_schema = T.StructType(
         [
