@@ -10,14 +10,14 @@ it, so source-side drift fails loudly instead of silently changing the sink.
 The parquet footer stays authoritative: the registry schema is never passed
 into ``spark.read``.  But the footer is read once per file listing, not once
 per call.  Inferring a schema costs a Spark job (~0.1 s) on every
-``spark.read.parquet``, so the first ``load_table`` of a path in a session
-infers it, validates it against the registry and records it, keyed by the
-session and by the path's listing signature (name, size and ``st_mtime_ns``
-of every file under it, read with ``os.scandir``).  Later loads with the
-same listing read with the recorded footer schema, which runs no job; a
-changed listing (a rewritten or drifted table) infers and validates again.
-A path ``os`` cannot list (a non-local URI) is never recorded and infers on
-every call.  The stream builders take their file schema from the same bind.
+``spark.read.parquet``, so ``footer_schema`` infers it on the first bind of
+a path in a session, validates it against the registry and records it, keyed
+by the session and by the path's listing signature (name, size and
+``st_mtime_ns`` of every file under it, read with ``os.walk``).  Every
+``load_table`` reads with that footer schema, which runs no job; a changed
+listing (a rewritten or drifted table) infers and validates again.  A path
+``os`` cannot list (a non-local URI) is never recorded and infers on every
+call.  The stream builders take their file schema from the same bind.
 """
 
 from __future__ import annotations
@@ -151,22 +151,17 @@ _BINDS: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
 def _listing(path: str) -> tuple | None:
     """(relative name, size, st_mtime_ns) of every file under ``path``, or
     None when ``os`` cannot list it."""
-    files = []
-
-    def walk(d: str, rel: str) -> None:
-        with os.scandir(d) as it:
-            for e in it:
-                if e.is_dir():
-                    walk(e.path, f"{rel}{e.name}/")
-                else:
-                    st = e.stat()
-                    files.append((rel + e.name, st.st_size, st.st_mtime_ns))
-
     try:
         if not os.path.isdir(path):
             st = os.stat(path)
             return (("", st.st_size, st.st_mtime_ns),)
-        walk(path, "")
+        files = []
+        for root, _, names in os.walk(path):
+            for n in names:
+                full = os.path.join(root, n)
+                st = os.stat(full)
+                rel = os.path.relpath(full, path)
+                files.append((rel, st.st_size, st.st_mtime_ns))
     except OSError:
         return None
     return tuple(sorted(files))
@@ -181,10 +176,10 @@ def _nanos_ts(name: str, file_schema: T.StructType) -> bool:
     )
 
 
-def _bind(
-    spark: SparkSession, sf_dir: str, name: str
-) -> tuple[T.StructType, DataFrame | None]:
-    """(footer schema, the inferring read or None if the bind was reused)."""
+def footer_schema(spark: SparkSession, sf_dir: str, name: str) -> T.StructType:
+    """The validated footer schema of ``{sf_dir}/{name}.parquet`` (before
+    ``load_table``'s ``events.ts`` transform), inferred once per session and
+    file listing; readers such as the stream builders declare it themselves."""
     if name == "events":
         # A TIMESTAMP(NANOS) file, which Spark's parquet reader rejects
         # otherwise, reads as raw int64 nanos; every events table in the
@@ -196,9 +191,8 @@ def _bind(
     binds = _BINDS.setdefault(spark, {})
     bound = binds.get(key)
     if signature is not None and bound is not None and bound[0] == signature:
-        return bound[1], None
-    df = spark.read.parquet(path)
-    schema = df.schema
+        return bound[1]
+    schema = spark.read.parquet(path).schema
     expected = TABLE_SCHEMAS.get(name)
     if expected is not None:
         got = {f.name: f.dataType for f in schema.fields}
@@ -209,14 +203,7 @@ def _bind(
             raise SchemaDriftError(f"{name}: parquet schema {got} != declared {want}")
     if signature is not None:
         binds[key] = (signature, schema)
-    return schema, df
-
-
-def footer_schema(spark: SparkSession, sf_dir: str, name: str) -> T.StructType:
-    """The validated footer schema of ``{sf_dir}/{name}.parquet`` (before
-    ``load_table``'s ``events.ts`` transform), for readers that declare
-    it themselves, such as the stream builders."""
-    return _bind(spark, sf_dir, name)[0]
+    return schema
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -227,9 +214,8 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     failure yields an empty list), any mismatch raises.  Every call returns
     a fresh relation, so self-joins of two loads resolve as two scans.
     """
-    schema, df = _bind(spark, sf_dir, name)
-    if df is None:
-        df = spark.read.schema(schema).parquet(f"{sf_dir}/{name}.parquet")
+    schema = footer_schema(spark, sf_dir, name)
+    df = spark.read.schema(schema).parquet(f"{sf_dir}/{name}.parquet")
     if _nanos_ts(name, schema):
         # floor-divide nanos to micros (DuckDB's TIMESTAMP_NS → TIMESTAMP
         # cast floors the same way, keeping the oracle comparable)
